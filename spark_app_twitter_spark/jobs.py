@@ -96,7 +96,9 @@ def backfill_serving(
     is source-agnostic, so backfill and live stream cannot drift.
     Partition pruning on the hive `date` column keeps the scan to the
     requested range; the upsert keys make re-running any range
-    idempotent.
+    idempotent. A range with no events writes nothing: an existing
+    serving table is left untouched, and a missing one is not
+    created.
     """
     from pyspark.sql import functions as F
 

@@ -17,7 +17,11 @@ from pyspark.sql import SparkSession
 # Defaults chosen for the 100 TB design point, not the local test box:
 # - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
 #   SMJ->BHJ conversion when a side turns out small.
-# - shuffle.partitions is only the *initial* number; AQE coalesces.
+# - shuffle.partitions is only the *initial* number for batch
+#   queries; AQE coalesces. Streaming queries run with AQE off, and a
+#   stateful stream's checkpoint pins its first start's count for
+#   good; the hourly serving stream sizes its own count
+#   (streaming/windowed.py).
 # - 128 MiB scan partitions keep scan tasks memory-bounded regardless
 #   of total input size.
 # - Arrow on: every Pandas UDF crosses the JVM<->Python boundary in

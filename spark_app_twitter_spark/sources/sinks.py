@@ -10,10 +10,30 @@ upserts by key instead, making reruns idempotent.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Mapping, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from spark_app_twitter_spark.functions.caches import unpersist_frame
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set session conf keys for the body only, then restore each to
+    its previous value (or unset it if it had none)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def write_partitioned_parquet_stream(
@@ -54,37 +74,60 @@ def upsert_parquet_batch(
     Deterministic under retries: re-applying the same batch yields
     the same table (idempotent upsert), which is exactly the
     guarantee foreachBatch needs since a batch may be re-run.
+
+    Contract, per call:
+
+    - ``batch`` is executed exactly once: the anti-join key side and
+      the union both read it, so it is checkpointed first. Re-run
+      from its plan, a streaming batch would re-run (and re-commit)
+      the stateful stage behind it.
+    - An empty batch writes nothing: the table (or its absence) is
+      left as it was. A watermark-advance micro-batch, which carries
+      no rows, still commits its state through that one execution.
+    - Every block the call stores is released before it returns.
     """
     spark = batch.sparkSession
+    batch = batch.localCheckpoint(eager=True)
+    held = [batch]
     try:
-        current = spark.read.parquet(path)
-    except Exception as e:
-        # ONLY the missing-path case means "first batch". Any other
-        # read failure (permissions, corrupt footer, concurrent
-        # writer) must fail the streaming query loudly — falling
-        # through would overwrite the serving table with just this
-        # micro-batch (unbounded data loss).
-        err_class = ""
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(e, attr, None)
-            if callable(fn):
-                try:
-                    err_class = fn() or ""
-                    break
-                except Exception:
-                    pass
-        if "PATH_NOT_FOUND" not in err_class and "Path does not exist" not in str(e):
-            raise
-        out = batch
-    else:
-        remaining = current.join(
-            batch.select(*keys).dropDuplicates(keys), list(keys), "left_anti"
-        )
-        out = remaining.unionByName(batch)
-    # Sever lineage before overwriting the path we just read from —
-    # a lazy plan would delete its own input mid-scan.
-    out = out.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(path)
+        if batch.isEmpty():
+            return
+        try:
+            current = spark.read.parquet(path)
+        except Exception as e:
+            # ONLY the missing-path case means "first batch". Any other
+            # read failure (permissions, corrupt footer, concurrent
+            # writer) must fail the streaming query loudly — falling
+            # through would overwrite the serving table with just this
+            # micro-batch (unbounded data loss).
+            if not _is_missing_path(e):
+                raise
+            out = batch
+        else:
+            remaining = current.join(
+                batch.select(*keys).dropDuplicates(keys), list(keys), "left_anti"
+            )
+            # Sever lineage before overwriting the path we just read
+            # from — a lazy plan would delete its own input mid-scan.
+            out = remaining.unionByName(batch).localCheckpoint(eager=True)
+            held.append(out)
+        out.write.mode("overwrite").parquet(path)
+    finally:
+        for df in held:
+            unpersist_frame(df)
+
+
+def _is_missing_path(e: Exception) -> bool:
+    err_class = ""
+    for attr in ("getCondition", "getErrorClass"):
+        fn = getattr(e, attr, None)
+        if callable(fn):
+            try:
+                err_class = fn() or ""
+                break
+            except Exception:
+                pass
+    return "PATH_NOT_FOUND" in err_class or "Path does not exist" in str(e)
 
 
 def write_upsert_stream(
@@ -228,14 +271,10 @@ def write_training_shards(
     # plans, AQE's runtime coalescing can merge the explicit shard
     # shuffle when stats are small and silently emit fewer files —
     # pin it off for just this write.
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with session_conf(
+        df.sparkSession, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    ):
         out.write.mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set(key, prev)
 
 
 def compact_parquet_table(

@@ -18,6 +18,13 @@ functions.py:42-43,63-71``). The engine instead:
 State at scale: |topics| x |open windows| rows for the aggregation +
 one entry per id inside the watermark horizon for dedup — both
 bounded by the watermark delay, independent of total stream length.
+That state is small, so the serving query starts on one state
+partition per core (``defaultParallelism``), not the batch
+``spark.sql.shuffle.partitions``. Each partition opens, loads and
+commits its own state stores every micro-batch, and a stream can
+never coalesce them: it runs with AQE off, and its checkpoint pins
+the count from the first start. A checkpoint started under another
+count keeps that count on restart.
 """
 
 from __future__ import annotations
@@ -29,7 +36,7 @@ from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from spark_app_twitter_spark.operators.enrich import enrich
 from spark_app_twitter_spark.schemas import EMOTIONS
-from spark_app_twitter_spark.sources.sinks import write_upsert_stream
+from spark_app_twitter_spark.sources.sinks import session_conf, write_upsert_stream
 
 DEFAULT_WATERMARK = "10 minutes"
 
@@ -229,12 +236,19 @@ def run_hourly_serving(
     available_now: bool = False,
 ) -> StreamingQuery:
     """The full replacement for the reference's cron loop: one
-    long-lived query maintaining the serving table incrementally."""
+    long-lived query maintaining the serving table incrementally.
+
+    A new checkpoint gets one state partition per core (see the
+    module docstring); the setting is scoped to ``start()``, which
+    copies the session conf into the query's own session."""
     agg = hourly_topic_aggregate(parsed_stream, watermark)
-    return write_upsert_stream(
-        agg,
-        serving_path,
-        checkpoint,
-        keys=["window_start", "topic"],
-        trigger_available_now=available_now,
-    )
+    spark = parsed_stream.sparkSession
+    cores = str(spark.sparkContext.defaultParallelism)
+    with session_conf(spark, {"spark.sql.shuffle.partitions": cores}):
+        return write_upsert_stream(
+            agg,
+            serving_path,
+            checkpoint,
+            keys=["window_start", "topic"],
+            trigger_available_now=available_now,
+        )

@@ -38,6 +38,47 @@ def test_upsert_parquet_batch_last_writer_wins(spark, tmp_path):
     assert again == got
 
 
+def test_upsert_parquet_batch_frees_its_blocks(spark, tmp_path):
+    """Every block an upsert stores (the checkpointed batch, the rewrite
+    barrier) is released before it returns, on the first-batch path
+    and on the read-merge path alike."""
+    jsc = spark.sparkContext._jsc
+    path = str(tmp_path / "serving")
+    before = jsc.getPersistentRDDs().size()
+    for run in range(3):
+        batch = spark.createDataFrame(
+            [("a", run), (f"k{run}", run)], "k string, run int"
+        )
+        upsert_parquet_batch(batch, run, path, keys=["k"])
+        assert jsc.getPersistentRDDs().size() == before
+    assert spark.read.parquet(path).count() == 4
+
+
+def test_upsert_parquet_batch_empty_batch_writes_nothing(spark, tmp_path):
+    """A batch with no rows (a watermark-advance micro-batch) leaves
+    an existing table's files untouched and creates no table."""
+    import os
+
+    path = str(tmp_path / "serving")
+    schema = "k string, v double"
+    upsert_parquet_batch(
+        spark.createDataFrame([("a", 1.0)], schema), 0, path, keys=["k"]
+    )
+
+    def files():
+        return {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+
+    snapshot = files()
+    empty = spark.createDataFrame([], schema)
+    upsert_parquet_batch(empty, 1, path, keys=["k"])
+    assert files() == snapshot
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("a", 1.0)]
+
+    missing = str(tmp_path / "missing")
+    upsert_parquet_batch(empty, 0, missing, keys=["k"])
+    assert not os.path.exists(missing)
+
+
 def test_write_training_shards(spark, tmp_path, sf_dir):
     import glob
 

@@ -137,6 +137,104 @@ def test_hourly_serving_upsert_and_idempotence(spark, tmp_path):
     assert spark.read.parquet(serving).count() == 4
 
 
+def _last_state(q):
+    return [p for p in q.recentProgress if p["stateOperators"]][-1]
+
+
+def test_hourly_serving_runs_each_microbatch_once(spark, tmp_path):
+    """The upsert executes its batch once, so the stateful stage runs
+    and commits once per micro-batch, on one state partition per core:
+    each micro-batch reports one state-store instance per partition,
+    and the state rows equal the (window, topic) cells still open
+    behind the watermark. Running a batch twice doubles both."""
+    src = str(tmp_path / "src")
+    serving = str(tmp_path / "serving")
+    _write_fixture(src, FIXTURE[:4])
+
+    q = windowed.run_hourly_serving(
+        parse_tweet_stream(sing.read_json_stream(spark, src)),
+        serving,
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(180)
+
+    cores = spark.sparkContext.defaultParallelism
+    stateful = [p for p in q.recentProgress if p["stateOperators"]]
+    assert [p["numInputRows"] > 0 for p in stateful] == [True, False]
+    for p in stateful:
+        assert p["stateOperators"][0]["numStateStoreInstances"] == cores
+    last = stateful[-1]
+    watermark = datetime.datetime.fromisoformat(
+        last["eventTime"]["watermark"].replace("Z", "+00:00")
+    ).replace(tzinfo=None)
+    cells = spark.read.parquet(serving).collect()
+    held = [
+        r for r in cells if r.window_start + datetime.timedelta(hours=1) > watermark
+    ]
+    assert len(cells) == 4 and len(held) == 1
+    assert last["stateOperators"][0]["numRowsTotal"] == len(held)
+
+
+def test_hourly_serving_restart_keeps_checkpoint_partition_count(
+    spark, tmp_path
+):
+    """A serving checkpoint started under another shuffle-partition
+    count keeps that count when run_hourly_serving restarts it, and
+    the restarted query still serves every cell correctly."""
+    from spark_app_twitter_spark.sources.sinks import (
+        session_conf,
+        write_upsert_stream,
+    )
+
+    src = str(tmp_path / "src")
+    serving = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
+    _write_fixture(src, FIXTURE[:4])
+    assert spark.sparkContext.defaultParallelism != 7
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "7"}):
+        q = write_upsert_stream(
+            windowed.hourly_topic_aggregate(
+                parse_tweet_stream(sing.read_json_stream(spark, src))
+            ),
+            serving,
+            ckpt,
+            keys=["window_start", "topic"],
+            trigger_available_now=True,
+        )
+    q.awaitTermination(180)
+    assert _last_state(q)["stateOperators"][0]["numStateStoreInstances"] == 7
+
+    _write_fixture(
+        src,
+        [
+            _tweet(6, "NATO", "2022-03-14T00:40:00.000Z", "a small win"),
+            _tweet(7, "Biden", "2022-03-14T01:05:00.000Z", "big talks"),
+        ],
+        name="part1.json",
+    )
+    q2 = windowed.run_hourly_serving(
+        parse_tweet_stream(sing.read_json_stream(spark, src)),
+        serving,
+        ckpt,
+        available_now=True,
+    )
+    q2.awaitTermination(180)
+    assert q2.recentProgress[0]["numInputRows"] == 2
+    assert _last_state(q2)["stateOperators"][0]["numStateStoreInstances"] == 7
+    got = {
+        (str(r.window_start), r.topic): r.counts
+        for r in spark.read.parquet(serving).collect()
+    }
+    assert got == {
+        ("2022-03-13 14:00:00", "Zelensky"): 1,
+        ("2022-03-13 14:00:00", "Putin"): 1,
+        ("2022-03-13 15:00:00", "Biden"): 1,
+        ("2022-03-14 00:00:00", "NATO"): 2,
+        ("2022-03-14 01:00:00", "Biden"): 1,
+    }
+
+
 def test_streaming_agg_matches_batch(spark, tmp_path):
     """Stream(availableNow) and batch over the same input agree —
     incremental execution must not change semantics."""
