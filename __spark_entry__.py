@@ -75,8 +75,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       3. everything else (freshly attested last round), last.
     When editing, append new queries to the front section and demote
     whatever the previous round just re-attested. Since round 8 the
-    window is stated EXPLICITLY as a _R{N}_WINDOW list (applied by
-    reordering the dict below at return time; round 10: _R10_WINDOW) —
+    window is stated EXPLICITLY as one list, currently _R16_WINDOW
+    (applied by reordering the dict below at return time; earlier
+    rounds' lists live in git history and CORRECTNESS_r*.json) —
     the section comments document provenance, the list documents the
     contract.
 
@@ -632,640 +633,6 @@ _R16_WINDOW = (
     "serving_session_window_stats",
     "serving_sessionize",
     "serving_signup_purchase_funnel",
-)
-
-
-# The round-15 driver verification window (VERDICT r14 item 1 + the
-# standing rotation contract), in priority order:
-#   (a) never-attested: the six r14 additions (repetition battery,
-#       topic terms, dup spans + rewrite, funnel v5, whitening) and
-#       the seven r15 additions (URL canonical dedup + host stats,
-#       tokenizer-aware packing pair, rollover pair, and the
-#       pretrain-export manifest capstone);
-#   (b) code changed in round 15, incl. consumers:
-#       - both streaming replay twins re-attest (reusable state dir +
-#         session-cached serve, r14 ADVICE items 2-3);
-#       - sim_knn_ivf re-attests as the two-level family seed for the
-#         _arrow_fine_assign NaN-slice fix (the fix sits above the
-#         gate-scale k switch; attestation pins that);
-#       - sim_cluster_topic_terms (DECIMAL lift) is already in (a);
-#         pipeline_funnel_v5 (quality_floor_from_state seam) too;
-#   (c) the 26 r09-attested rows — the whole cohort fits, closing the
-#       r14 target "no attestation older than r10" one round late
-#       for the leftovers and on time for everything else;
-#   (d) fill to 50 with the head of the r10 cohort.
-_R15_WINDOW = (
-    # (a) never attested
-    "text_repetition_rules",
-    "sim_cluster_topic_terms",
-    "dedup_dup_spans",
-    "dedup_span_rewrite",
-    "pipeline_funnel_v5",
-    "sim_embedding_whiten",
-    "dedup_url_canonical",
-    "dedup_url_host_stats",
-    "pack_unigram_sequences",
-    "pack_unigram_efficiency",
-    "pack_rollover_segments",
-    "pack_rollover_fill",
-    "pipeline_pretrain_export",
-    "dedup_lsh_cluster_best",
-    "pipeline_funnel_v6",
-    "pipeline_export_append",
-    # (b) changed this round + consumers/family
-    "stream_quota_state_sample",
-    "stream_quality_floor_state",
-    "sim_knn_ivf",
-    # (b, continuation) the shared keep-best tail refactor renamed
-    # CTEs inside CLUSTER_BEST_REPRESENTATIVES_SQL — its direct
-    # consumer and the two composed funnels off-window re-attest
-    # (v5/v6/capstone already head the window)
-    "dedup_cluster_best",
-    "pipeline_funnel_v3",
-    "pipeline_funnel_v4",
-    # (c) the 26 r09-attested rows
-    "multimodal_chunk_dedup",
-    "serving_funnel_conversion",
-    "serving_new_vs_returning",
-    "serving_time_to_convert",
-    "serving_weekly_active",
-    "sim_centroid_classifier_eval",
-    "sim_coreset_kcenter",
-    "sim_embedding_dim_stats",
-    "sim_knn_label_purity",
-    "sim_knn_quantized",
-    "sim_mmr_rerank",
-    "sim_mmr_rerank_ivf",
-    "sim_quantize_embeddings",
-    "sketch_kmv_source_overlap",
-    "text_common_ngrams",
-    "text_doc_fingerprint",
-    "text_length_histogram",
-    "text_quality_rules",
-    "text_rare_token_ratio",
-    "text_redact",
-    "tpch_q1_incremental",
-    "tpch_q1_retraction",
-    "tpch_q3_incremental",
-    "tpch_q3_retraction",
-    "versioning_scd2",
-    "versioning_scd2_pit",
-    # (d) fill from the r10 cohort head
-    "agg_salted_event_totals",
-    "asof_purchases_last_click",
-)
-
-
-# The round-14 driver verification window (VERDICT r13 item 1 + the
-# standing rotation contract), in priority order:
-#   (a) never-attested: the two r14 streaming-monitor replay twins;
-#   (b) code changed in round 14, incl. transitive consumers:
-#       - lang_id grew degenerate-cardinality guards (ADVICE r13) —
-#         langid_metrics + tokenizer_fertility are label-table
-#         consumers;
-#       - knn_graph_multiprobe's assignment/candidate stages were
-#         factored into shared helpers for the r14 cost decomposition
-#         (plan-identical; refine rides the seed, knn_graph/delta
-#         re-attest as family, double-duty r09 rows);
-#   (c) the 30 r08-attested rows sweep.py --stale listed at round
-#       start (includes the six late-r13 earmarks: split_leakage,
-#       winnowing_pairs, degree_stats, label_propagation, source_kl,
-#       pmi_collocations);
-#   (d) fill to 50 with the head of the r09 cohort (dedup family +
-#       kcore/chunk_dedup/funnel_conversion/new_vs_returning).
-# The r14 Arrow-fold extension (fine assignment, probe scoring) sits
-# entirely above the gate-scale k switches — gen_plans diff verified
-# no attested plan changed (worklog/r14_notes.md).
-# After this window runs, no attestation is older than r09; the 25
-# r09 rows left over head the r15 window (sweep.py --stale).
-_R14_WINDOW = (
-    # (a) never attested
-    "stream_quota_state_sample",
-    "stream_quality_floor_state",
-    # (b) changed this round + consumers/family
-    "text_lang_id",
-    "text_langid_metrics",
-    "text_tokenizer_fertility",
-    "sim_knn_graph_multiprobe",
-    "sim_knn_graph_refine",
-    "sim_knn_graph",
-    "sim_knn_graph_delta",
-    # late r14: the pca trainer now caches eigenvalues alongside axes
-    # (the whitening artifact) — pca re-attests as the touched
-    # consumer; displaces the last r09 fill row (multimodal_chunk_dedup
-    # heads r15 with the other leftovers)
-    "sim_embedding_pca",
-    # (c) the 30 r08-attested rows
-    "dedup_split_leakage_pairs",
-    "dedup_winnowing_pairs",
-    "graph_degree_stats",
-    "graph_label_propagation",
-    "graph_pagerank_near_dup",
-    "graph_triangle_count",
-    "pack_length_buckets",
-    "pack_shard_manifest",
-    "retrieval_phrase_search",
-    "serving_distinct_users",
-    "serving_event_transitions",
-    "serving_hourly_anomalies",
-    "serving_item_cooccurrence",
-    "serving_loyal_purchasers",
-    "serving_moving_avg_daily",
-    "serving_rollup_value",
-    "serving_stickiness",
-    "serving_value_histogram",
-    "serving_value_quartiles",
-    "sim_kmeans_quality",
-    "sim_knn_binary_hamming",
-    "sim_knn_ivf_pq",
-    "text_char_entropy",
-    "text_corpus_datacard",
-    "text_ngram_novelty",
-    "text_pii_stats",
-    "text_pmi_collocations",
-    "text_readability",
-    "text_source_kl",
-    "text_winnowing",
-    # (d) fill from the r09 cohort head
-    "dedup_clusters",
-    "dedup_containment_pairs",
-    "dedup_incremental",
-    "dedup_lsh_clusters",
-    "dedup_minhash_jaccard_est",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_quality_lift",
-    "dedup_span_stats",
-    "dedup_threshold_yield",
-    "graph_kcore",
-)
-
-
-# The round-13 driver verification window (VERDICT r12 item 1 + the
-# rotation contract in worklog/r13_plan.md), in priority order:
-#   (a) code changed in round 13, incl. transitive consumers:
-#       - the bitext margin stage checkpoints its 3-consumer ranked
-#         relation (18->4 shuffles on the capped default) — all five
-#         bitext registrations share _bitext_margins;
-#       - retrieval_index_delta checkpoints its CDC delta (13->5);
-#       - bm25_search grew the streaming-hygiene `materialized`
-#         out-param (batch behavior unchanged; retrieval_bm25/_eval/
-#         hybrid_rrf re-attest as its callers);
-#       - lang-ID scoring rewritten to InSet conditional sums off a
-#         position explode (13.3x -> 6.5x at 100x) — metrics +
-#         fertility are label-table consumers;
-#       - tpch_top_customers_per_nation dropped the spilling
-#         per-order pre-agg (15.5x -> 7.9x);
-#       - embedding covariance pair emission is two chained position
-#         explodes (13.4x -> 2.0x) — pca trains on it (isotropy too,
-#         listed with its stale cohort below);
-#       - cluster_balanced_sample's draw moved to the shared
-#         balanced_draw_expr (quotamon twin) — pipeline_funnel_v4
-#         composes the sampler.
-#   (b) the 22 r07-attested rows named in worklog/r13_plan.md — the
-#       oldest attestations in the registry (IVF/PQ/unigram/BPE/
-#       mixture/DSIR/DP families + the embedding audits).
-#   (c) fill to 50 with the oldest r08-attested rows, alphabetical
-#       (dedup cohort; sim_bitext_mining_exact and
-#       tpch_top_customers_per_nation left this cohort for (a);
-#       the late bigram-family changes displaced the last four fill
-#       slots — dedup_split_leakage_pairs, dedup_winnowing_pairs,
-#       graph_degree_stats, graph_label_propagation head r14).
-# After this window runs, no registry entry's attestation is older
-# than r08; the 33 r08 rows left over head the r14 window
-# (sweep.py --stale lists them).
-_R13_WINDOW = (
-    # (a) changed this round
-    "sim_bitext_mining",
-    "sim_bitext_mining_exact",
-    "sim_bitext_mining_exact_cells",
-    "sim_bitext_recall_audit",
-    "sim_bitext_probe_sensitivity",
-    "retrieval_index_delta",
-    "retrieval_bm25",
-    "retrieval_bm25_eval",
-    "retrieval_hybrid_rrf",
-    "text_lang_id",
-    "text_langid_metrics",
-    "text_tokenizer_fertility",
-    "tpch_top_customers_per_nation",
-    "sim_embedding_covariance",
-    "sim_embedding_pca",
-    "sim_cluster_balanced_sample",
-    "pipeline_funnel_v4",
-    # (a, late) the bigram family moved onto the codegen'd
-    # exploded_shingles emission (12.1x -> 1.8x at 100x); diversity
-    # shares the helper, perplexity rides the scorer
-    "text_bigram_lm_score",
-    "text_perplexity_buckets",
-    "text_kn_bigram_score",
-    "text_ngram_diversity",
-    # (b) the r07-attested remainder (rotation contract)
-    "sim_contrastive_pairs",
-    "sim_embedding_isotropy",
-    "sim_embedding_outliers",
-    "sim_embedding_sanity",
-    "sim_ivf_index_append",
-    "sim_ivf_index_export",
-    "sim_ivf_probe_sensitivity",
-    "sim_ivf_rebalance_plan",
-    "sim_kmeans_cells_2level",
-    "sim_knn_ivf",
-    "sim_knn_ivf_quantized",
-    "sim_knn_pq_adc",
-    "sim_matryoshka_recall",
-    "sim_pq_encode",
-    "sim_pq_train",
-    "text_bpe_compression",
-    "text_dsir_weights",
-    "text_mixture_temperature",
-    "text_unigram_encode",
-    "text_unigram_prune",
-    "text_unigram_train",
-    "versioning_dp_counts",
-    # (c) oldest r08 attestations, alphabetical
-    "dedup_cluster_survivors_by_source",
-    "dedup_exact",
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_lsh_pairs_capped",
-    "dedup_minhash_signatures",
-    "dedup_simhash_clusters",
-    "dedup_split_leakage",
-)
-
-
-# The round-12 driver verification window (VERDICT r11 item 1 + the
-# rotation contract in worklog/r12_plan.md), in priority order:
-#   (a) never-attested: the r12 registration (the soft-dedup sampler
-#       composition);
-#   (b) code changed in round 12: the bigram-LM scoring join is now
-#       size-triggered (auto broadcast/shuffle), the bitext recall
-#       audit checkpoints its pair relations (62->2 shuffles), and
-#       bloom_gate's prefilter became a constant-folded map-side
-#       bit-array test (feeds text_decontaminate_bloom);
-#   (c) the remaining 19 r06-attested rows — the oldest attestations
-#       in the registry (TPC-H q4/q10/q12/q13/q15/q18/q22 +
-#       customers_without_orders, the BPE train/encode family,
-#       sketches, mixture plan/apply, versioning, train_lang_lr);
-#   (d) fill to 50 with the oldest r07-attested rows, alphabetical.
-# After this window runs, no registry entry's attestation is older
-# than r07 (< 6 rounds); the 22 r07 rows left over (13 named in
-# worklog/r13_plan.md plus sim_ivf_rebalance_plan,
-# sim_kmeans_cells_2level, sim_ivf_index_append, sim_ivf_index_export,
-# sim_ivf_probe_sensitivity, sim_embedding_sanity,
-# sim_embedding_outliers, sim_embedding_isotropy and
-# sim_contrastive_pairs — displaced by the five late-r12
-# registrations and the five changed rows: three retrieval + the two
-# lang-ID rows) head the r13 window (sweep.py --stale lists them).
-# Staleness accounting is rename-aware since r12.
-_R12_WINDOW = (
-    # (a) never-attested (the five r12 registrations)
-    "text_weighted_sample_soft",
-    "sim_cluster_balanced_sample",
-    "text_tokenizer_fertility",
-    "text_quality_floor_by_source",
-    "pipeline_funnel_v4",
-    # (b) changed this round (pipeline_funnel_v3 transitively: its
-    # n-gram screen stage rides the rewritten bloom gate)
-    "text_bigram_lm_score",
-    "sim_bitext_recall_audit",
-    "text_decontaminate_bloom",
-    "pipeline_funnel_v3",
-    # (b) late r12: the bm25 core + query-likelihood checkpoint their
-    # shared bounded relations (plan-width cut: 25->7 shuffles,
-    # 22->2 scans on the widest; retrieval_bm25 and hybrid_rrf are
-    # transitive consumers already in the (d) fill below)
-    "retrieval_bm25_eval",
-    "retrieval_query_expansion",
-    "retrieval_query_likelihood",
-    # (b) late r12: lang_id gained the session label-table cache
-    # (its consumers fertility / train_lang_lr are already above and
-    # in (c) respectively)
-    "text_lang_id",
-    "text_langid_metrics",
-    # (c) r06 attestations (oldest in the registry)
-    "sketch_hist_quantiles",
-    "sketch_hll_daily_users",
-    "text_bpe_encode",
-    "text_bpe_train_batched",
-    "text_bpe_train_merges",
-    "text_mixture_apply",
-    "text_mixture_plan",
-    "text_train_lang_lr",
-    "tpch_customers_without_orders",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_by_status",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q18_large_volume_orders",
-    "tpch_q22_dormant_rich_customers",
-    "tpch_q4_order_priority",
-    "versioning_corpus_delta",
-    "versioning_incremental_stats",
-    "versioning_k_anonymous",
-    # (d) oldest r07 attestations, alphabetical
-    "agg_serving_join",
-    "dedup_cluster_sizes",
-    "dedup_weighted_sample",
-    "layout_zorder_skipping",
-    "retrieval_bm25",
-    "retrieval_hybrid_rrf",
-    "retrieval_index_delta",
-    "retrieval_inverted_index",
-    "retrieval_rag_ivf",
-    "sem_dedup",
-    "sem_dedup_flat",
-    "serving_dedup_first",
-    "serving_grains_grouping_sets",
-    "serving_hourly_window",
-    "serving_trending_topics",
-    "serving_value_percentiles",
-    "sim_ann_recall_audit",
-)
-
-
-# The round-11 driver verification window (VERDICT r10 item 1 + the
-# rotation contract in worklog/r11_plan.md), in priority order:
-#   (a) never-attested: the round-11 registration (the semantic-decon
-#       threshold-sensitivity curve);
-#   (b) code changed in round 11: the bigram-LM scoring join gained
-#       the executable shuffle-hash fallback seam, and
-#       functions/ranking.py (null-partition offsets + dtype
-#       preservation) feeds rfm/power_users/perplexity_buckets;
-#   (c) the 17 r05-attested rows (the TPC-H batch cohort +
-#       text_tfidf_top_terms) — the oldest attestations in the
-#       registry, displaced since the r10 window;
-#   (d) fill to 50 with the oldest r06-attested rows, alphabetical
-#       (the 16 r06-or-renamed remainder heads the r12 window; each keeps a
-#       local DuckDB parity test in CI and is sweep-green).
-# After this window runs, no registry entry's attestation is older
-# than r06 (< 5 rounds).
-_R11_WINDOW = (
-    # (a) never-attested
-    "text_semdecon_sensitivity",
-    "text_decon_screen_agreement",
-    "pipeline_funnel_v3",
-    "dedup_soft_weights",
-    "text_contamination_by_source",
-    # (b) changed this round
-    "text_bigram_lm_score",
-    "serving_rfm_scores",
-    "serving_power_users",
-    "text_perplexity_buckets",
-    # (b, late r11) the shared bench/train-split refactor touches the
-    # production semantic screen too — re-attest it
-    "text_decontaminate_semantic",
-    # (c) r05 attestations
-    "text_tfidf_top_terms",
-    "tpch_promo_revenue_share",
-    "tpch_q11_important_parts",
-    "tpch_q16_supplier_part_stats",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q1_pricing_summary",
-    "tpch_q20_excess_share_suppliers",
-    "tpch_q21_sole_blame_suppliers",
-    "tpch_q2_min_price_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_rich_customers_vs_nation",
-    # (d) oldest r06 attestations, alphabetical
-    "agg_emotion_counts",
-    "agg_emotion_pivot",
-    "agg_emotion_share",
-    "agg_positivity",
-    "asof_nearest_click",
-    "dedup_cluster_best",
-    "dedup_paragraphs",
-    "dedup_paragraphs_rewrite",
-    "dedup_simhash",
-    "dedup_simhash64_pairs",
-    "dedup_source_overlap",
-    "diag_key_skew",
-    "enrich_documents",
-    "ingest_parse_events",
-    "layout_compaction_plan",
-    "multimodal_video_frames",
-    "pack_chunk_documents",
-    "pack_efficiency",
-    "pack_sequences",
-    "rag_retrieve",
-    "sim_embedding_drift",
-    "sim_embedding_pca",
-    "sketch_cms_top_terms",
-)
-
-
-# The round-9 driver verification window (VERDICT r08 item 1 + the
-# rotation contract), in priority order:
-#   (a) ALL 26 never-driver-attested entries — the 18 late-round-8
-#       additions (kNN-graph family incl. delta, k-core, coreset,
-#       MMR-IVF, quality-lift, threshold-yield, centroid-classifier
-#       eval, label purity, Q1 IVM + retraction, power users,
-#       chunk dedup, rare tokens, new-vs-returning, time-to-convert)
-#       plus the 8 round-9 registrations (Q3 IVM pair,
-#       sim_bitext_mining_exact_cells, sim_knn_graph_convergence,
-#       graph_modularity, versioning_scd2 + its point-in-time join,
-#       sim_bitext_recall_audit);
-#   (b) the 5 entries whose code or oracle changed this round
-#       (sim_mmr_rerank: applyInPandas greedy + materialized twin;
-#       sim_bitext_mining: now the capped path;
-#       dedup_lsh_clusters: shared-propagation refactor;
-#       sketch_kmv_source_overlap: integer-floor twin;
-#       serving_funnel_conversion: dropped unused aggregate) — note
-#       sim_mmr_rerank_ivf / sim_knn_graph_multiprobe /
-#       sim_knn_graph_refine also changed but already sit in (a);
-#   (c) 19 of the 29 oldest (r04-attested) rows. The 10 r04 rows
-#       still displaced — multimodal_resize_images,
-#       multimodal_audio_chunks, serving_props_stats,
-#       serving_retention_cohorts, sim_kmeans_cells,
-#       text_weighted_sample, text_train_split, text_token_stats,
-#       text_token_counts, text_token_budget_sample — head the
-#       round-10 window; each keeps a local DuckDB parity test in CI
-#       and is sweep-green at sf0.01.
-# After this window runs, every one of the 238 registry entries has
-# a driver CORRECTNESS row in some round.
-_R9_WINDOW = (
-    # (a) never-attested
-    "sim_coreset_kcenter",
-    "multimodal_chunk_dedup",
-    "serving_power_users",
-    "graph_kcore",
-    "dedup_threshold_yield",
-    "text_rare_token_ratio",
-    "sim_knn_graph",
-    "sim_knn_graph_multiprobe",
-    "dedup_quality_lift",
-    "serving_new_vs_returning",
-    "sim_mmr_rerank_ivf",
-    "serving_time_to_convert",
-    "sim_knn_graph_refine",
-    "sim_knn_graph_delta",
-    "sim_centroid_classifier_eval",
-    "sim_knn_label_purity",
-    "tpch_q1_incremental",
-    "tpch_q1_retraction",
-    "tpch_q3_incremental",
-    "tpch_q3_retraction",
-    "sim_bitext_mining_exact_cells",
-    "sim_knn_graph_convergence",
-    "graph_modularity",
-    "serving_topic_share",
-    "serving_topic_means",
-    "pack_curriculum_shards",
-    "versioning_scd2",
-    "versioning_scd2_pit",
-    "sim_bitext_recall_audit",
-    # (b) changed this round
-    "sim_mmr_rerank",
-    "sim_bitext_mining",
-    "dedup_lsh_clusters",
-    "sketch_kmv_source_overlap",
-    "serving_funnel_conversion",
-    # (c) oldest attestations (r04)
-    "dedup_clusters",
-    "dedup_containment_pairs",
-    "dedup_incremental",
-    "dedup_minhash_jaccard_est",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_span_stats",
-    "serving_weekly_active",
-    "sim_embedding_covariance",
-    "sim_embedding_dim_stats",
-    "sim_knn_quantized",
-    "sim_quantize_embeddings",
-    "text_bigram_lm_score",
-    "text_common_ngrams",
-    "text_doc_fingerprint",
-    "text_lang_id",
-    "text_length_histogram",
-    "text_ngram_diversity",
-    "text_quality_rules",
-    "text_redact",
-)
-
-
-# The round-10 driver verification window (VERDICT r9 item 4 + the
-# rotation contract in worklog/r10_plan.md), in priority order. After
-# this window runs, every registry entry's attestation is <= 5 rounds
-# old (the r04 backlog clears; next-oldest become the 17 remaining
-# r05 rows — see worklog/r11_plan.md).
-_R10_WINDOW = (
-    # (a) never-attested: the round-10 registrations
-    "sim_bitext_probe_sensitivity",
-    "text_decontaminate_semantic",
-    # (b) code or oracle changed in round 10 (distributed
-    # exact-ranking rewrites, micro-idiom, degree reuse, the three
-    # window-free lint-shrink rewrites)
-    "serving_rfm_scores",
-    "serving_power_users",
-    "text_zipf_fit",
-    "text_vocab_coverage",
-    "text_perplexity_buckets",
-    "sim_knn_graph_convergence",
-    "graph_modularity",
-    "serving_topic_share",
-    "serving_topic_means",
-    "pack_curriculum_shards",
-    # (c) the 10 r04-attested rows displaced since r9
-    "multimodal_resize_images",
-    "multimodal_audio_chunks",
-    "serving_props_stats",
-    "serving_retention_cohorts",
-    "sim_kmeans_cells",
-    "text_weighted_sample",
-    "text_train_split",
-    "text_token_stats",
-    "text_token_counts",
-    "text_token_budget_sample",
-    # (d) oldest remaining attestations (r05), alphabetical
-    "agg_salted_event_totals",
-    "asof_purchases_last_click",
-    "layout_zorder_events",
-    "multimodal_media_features",
-    "pack_shuffle_export",
-    "range_clicks_near_errors",
-    "range_errors_near_purchases",
-    "serving_cube_value",
-    "serving_cumulative_daily",
-    "serving_hourly_gapfill",
-    "serving_latest_inputs",
-    "serving_session_paths",
-    "serving_session_window_stats",
-    "serving_sessionize",
-    "serving_signup_purchase_funnel",
-    "serving_unpivot_emotions",
-    "serving_value_anomalies",
-    "sim_embedding_near_dup",
-    "sim_knn_bruteforce",
-    "sim_knn_lsh",
-    "sim_knn_lsh_multi",
-    "sim_label_centroids",
-    "text_bpe_pair_counts",
-    "text_corpus_funnel",
-    "text_decontaminate",
-    "text_repetition_stats",
-    "text_sample_stratified",
-    "text_source_stats",
-)
-
-
-# Historical: the round-8 window (kept for provenance; superseded by
-# _R9_WINDOW above).
-_R8_WINDOW = (
-    "dedup_lsh_clusters",
-    "dedup_minhash_lsh_pairs_capped",
-    "dedup_split_leakage_pairs",
-    "dedup_simhash_clusters",
-    "text_vocab_coverage",
-    "retrieval_query_expansion",
-    "text_pii_stats",
-    "text_ngram_novelty",
-    "sim_kmeans_quality",
-    "serving_funnel_conversion",
-    "sim_bitext_mining_exact",
-    "sim_bitext_mining",
-    "dedup_split_leakage",
-    "graph_pagerank_near_dup",
-    "pack_shard_manifest",
-    "text_corpus_datacard",
-    "dedup_cluster_survivors_by_source",
-    "retrieval_bm25_eval",
-    "sketch_kmv_source_overlap",
-    "sim_knn_binary_hamming",
-    "serving_hourly_anomalies",
-    "pack_length_buckets",
-    "text_source_kl",
-    "text_winnowing",
-    "sim_knn_ivf_pq",
-    "retrieval_query_likelihood",
-    "serving_event_transitions",
-    "dedup_winnowing_pairs",
-    "text_char_entropy",
-    "serving_rfm_scores",
-    "graph_triangle_count",
-    "serving_distinct_users",
-    "serving_rollup_value",
-    "serving_loyal_purchasers",
-    "serving_moving_avg_daily",
-    "serving_value_quartiles",
-    "serving_value_histogram",
-    "tpch_top_customers_per_nation",
-    "dedup_exact",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh_pairs",
-    "text_readability",
-    "text_pmi_collocations",
-    "graph_degree_stats",
-    "graph_label_propagation",
-    "serving_item_cooccurrence",
-    "retrieval_phrase_search",
-    "text_kn_bigram_score",
-    "sim_mmr_rerank",
-    "serving_stickiness",
 )
 
 

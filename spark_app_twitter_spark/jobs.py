@@ -160,6 +160,322 @@ def prepare_training_corpus(
     return spark.read.parquet(out_path).count()
 
 
+# ---------------------------------------------------------------------------
+# The staged corpus funnel: ONE definition behind every corpus build
+# (prepare_training_corpus_v2..v6), every funnel report
+# (pipeline_funnel_v3..v6) and the pretraining export manifest.
+#
+# A stage is a doc_id relation. The epoch rows (stage "ep") are
+# semi-joined with every gate and anti-joined with every screen; the
+# other stages only report. A version is an ordered stage list, and
+# that order is the order of its report keys and funnel rows. Every
+# stage frame is eagerly checkpointed (unless derived from one that
+# is): the survivor join and the stage counts both consume it, and
+# without the pin each count would replay the stage's full lineage
+# (CC rounds, bloom build, segment shuffle) a second time. The
+# DuckDB twins (_pipeline_funnel_vN_sql) stay hand-written, so the
+# parity tests cross-check this table against the component oracles.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """``label`` is the report key / funnel row; ``kind`` is the
+    survivor join (``left_semi`` gate, ``left_anti`` screen, ``None``
+    report only); ``build(spark, sf_dir, frames)`` returns the stage
+    relation, ``frames`` holding the version's earlier stages;
+    ``pin=False`` marks a cheap derivation of a pinned stage, which
+    gets no checkpoint of its own."""
+
+    label: str
+    kind: str | None
+    build: object
+    pin: bool = True
+
+
+def _seg(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    from spark_app_twitter_spark.operators.dedup import paragraph_dedup
+
+    return paragraph_dedup(spark, sf_dir)
+
+
+def _gate(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # mostly-recycled docs out (strictly more dropped than kept segments)
+    from pyspark.sql import functions as F
+
+    return (
+        f["seg"]
+        .where(F.col("n_dropped") * 2 <= F.col("n_segments"))
+        .select("doc_id")
+    )
+
+
+def _reps(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # near-dup clusters: keep each cluster's best representative
+    # (highest quality score, tie lowest id) — the exact audit chain
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.dedup import (
+        cluster_best_representatives,
+    )
+
+    return cluster_best_representatives(spark, sf_dir).select(
+        F.col("rep_doc_id").alias("doc_id")
+    )
+
+
+def _reps_lsh(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # The same election over the capped O(n) LSH cluster relation —
+    # the 100 TB-ready stage. Measured motivation (tools/decomp_funnel.py
+    # at the 100x near-dup fixture): the exact reps stage was 1,392 s
+    # of the funnel's ~1,450 s; every other stage is seconds.
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.dedup import lsh_cluster_best
+
+    return lsh_cluster_best(spark, sf_dir).select(
+        F.col("rep_doc_id").alias("doc_id")
+    )
+
+
+def _semk(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # SemDeDup keep-first survivors; a doc must have an embedding to
+    # pass (the vec_id == doc_id contract)
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.semdedup import semdedup
+
+    return (
+        semdedup(spark, sf_dir)
+        .where(F.col("keep"))
+        .select(F.col("vec_id").alias("doc_id"))
+    )
+
+
+def _qgate(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # docs at or above their OWN source's quality floor (the
+    # text_quality_floor_by_source calibration applied per doc: bucket
+    # >= floor_bucket, a |sources|-row broadcast join)
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.functions.text import tokens
+    from spark_app_twitter_spark.operators.textstats import (
+        QUALITY_FLOOR_GRID,
+        quality_floor_by_source,
+        quality_score_expr,
+    )
+    from spark_app_twitter_spark.sources.parquet import load_table
+
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    bucket = F.floor(
+        quality_score_expr(tokens("text")) * F.lit(QUALITY_FLOOR_GRID)
+    ).cast("int")
+    floors = quality_floor_by_source(spark, sf_dir).select(
+        "source", "floor_bucket"
+    )
+    return (
+        docs.select("doc_id", "source", bucket.alias("bucket"))
+        .join(F.broadcast(floors), "source")
+        .where(F.col("bucket") >= F.col("floor_bucket"))
+        .select("doc_id")
+    )
+
+
+def _quota(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # the topic-balanced keep set (sim_cluster_balanced_sample: each
+    # semantic cell contributes at most its quota, tails kept whole)
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.clustering import (
+        cluster_balanced_sample,
+    )
+
+    return cluster_balanced_sample(spark, sf_dir).select(
+        F.col("vec_id").alias("doc_id")
+    )
+
+
+def _rgate(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # the Gopher n-gram repetition battery: phrase-spam and
+    # boilerplate are cut BEFORE epoch planning
+    from spark_app_twitter_spark.operators.textstats import (
+        repetition_rules,
+    )
+
+    return repetition_rules(spark, sf_dir).where("passes").select("doc_id")
+
+
+def _cn(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # any true benchmark n-gram hit (bloom-prefiltered exact gate)
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.textstats import (
+        decontaminate_bloom,
+    )
+
+    return (
+        decontaminate_bloom(spark, sf_dir)
+        .where(F.col("n_hit_grams") > 0)
+        .select("doc_id")
+    )
+
+
+def _cs(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # embedding-cosine hit against the held-out benchmark (the
+    # paraphrase-robust screen)
+    from spark_app_twitter_spark.operators.semdedup import (
+        decontaminate_semantic,
+    )
+
+    return decontaminate_semantic(spark, sf_dir).select("doc_id")
+
+
+def _cboth(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    return f["cn"].join(f["cs"], "doc_id", "left_semi")
+
+
+def _ep(spark: SparkSession, sf_dir: str, f: dict) -> DataFrame:
+    # Mixture epoch rows. The held-out benchmark docs themselves must
+    # NEVER train: the screens flag only TRAINING docs that overlap
+    # them, so the bench split is filtered here (v1's invariant).
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.operators.textstats import (
+        DECON_BENCH_MOD,
+        DECON_BENCH_REM,
+        mixture_apply,
+    )
+
+    return mixture_apply(spark, sf_dir).where(
+        (F.col("doc_id") % DECON_BENCH_MOD) != DECON_BENCH_REM
+    )
+
+
+_STAGES = {
+    "seg": _Stage("corpus", None, _seg),
+    "gate": _Stage("after_segment_gate", "left_semi", _gate, pin=False),
+    "reps": _Stage("lexical_representatives", "left_semi", _reps),
+    "reps_lsh": _Stage("lexical_representatives", "left_semi", _reps_lsh),
+    "semk": _Stage("semantic_survivors", "left_semi", _semk),
+    "qgate": _Stage("quality_floor_survivors", "left_semi", _qgate),
+    "quota": _Stage("topic_quota_kept", "left_semi", _quota),
+    "rgate": _Stage("repetition_pass", "left_semi", _rgate),
+    "cn": _Stage("contaminated_ngram", "left_anti", _cn),
+    "cs": _Stage("contaminated_semantic", "left_anti", _cs),
+    "cboth": _Stage("contaminated_both", None, _cboth, pin=False),
+    "ep": _Stage("epoch_rows", None, _ep),
+}
+
+_VERSIONS = {
+    "v2": ("seg", "gate", "reps", "cn", "ep"),
+    "v3": ("seg", "gate", "reps", "semk", "cn", "cs", "cboth", "ep"),
+    "v4": (
+        "seg", "gate", "reps", "semk", "qgate", "quota", "cn", "cs", "ep",
+    ),
+    "v5": (
+        "seg", "gate", "reps", "semk", "qgate", "quota", "rgate",
+        "cn", "cs", "ep",
+    ),
+    "v6": (
+        "seg", "gate", "reps_lsh", "semk", "qgate", "quota", "rgate",
+        "cn", "cs", "ep",
+    ),
+}
+
+# v2 predates the embedding screen; its report keeps the round-6 keys
+_V2_LABELS = {"reps": "cluster_representatives", "cn": "contaminated"}
+
+
+def _labels(version: str) -> list[tuple[str, str]]:
+    """(stage key, report label) in report order."""
+    rename = _V2_LABELS if version == "v2" else {}
+    return [(k, rename.get(k, _STAGES[k].label)) for k in _VERSIONS[version]]
+
+
+def _stage_frames(spark: SparkSession, sf_dir: str, version: str) -> dict:
+    """The version's stage relations keyed by stage, in stage order."""
+    f: dict = {}
+    for key in _VERSIONS[version]:
+        stage = _STAGES[key]
+        df = stage.build(spark, sf_dir, f)
+        f[key] = df.localCheckpoint(eager=True) if stage.pin else df
+    return f
+
+
+def _survivors(frames: dict) -> DataFrame:
+    """The epoch rows that pass every gate and no screen in
+    ``frames``."""
+    out = frames["ep"]
+    for key, df in frames.items():
+        if _STAGES[key].kind:
+            out = out.join(df, "doc_id", _STAGES[key].kind)
+    return out
+
+
+def _funnel_report(
+    spark: SparkSession, sf_dir: str, version: str
+) -> DataFrame:
+    """(stage, n_docs): one row per stage of ``version``, then the
+    surviving epoch rows and distinct docs. Each row is one
+    aggregation over a checkpointed key relation."""
+    from pyspark.sql import functions as F
+
+    f = _stage_frames(spark, sf_dir, version)
+    f["ep"] = f["ep"].select("doc_id", "epoch")
+    surv = _survivors(f).localCheckpoint(eager=True)
+    n = F.count(F.lit(1))
+    rows = [(label, f[key], n) for key, label in _labels(version)] + [
+        ("surviving_epoch_rows", surv, n),
+        ("surviving_distinct_docs", surv, F.count_distinct(F.col("doc_id"))),
+    ]
+    out = None
+    for stage, df, agg in rows:
+        part = df.agg(agg.cast("long").alias("n_docs")).select(
+            F.lit(stage).alias("stage"), "n_docs"
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def _export_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    version: str,
+    out_path: str,
+    n_shards: int,
+) -> dict:
+    """Write ``version``'s surviving epoch rows as a deterministic
+    shuffle-shard export and return the per-stage report. The stage
+    checkpoints are released before returning: nothing the job
+    returns reads them."""
+    from pyspark.sql import functions as F
+
+    from spark_app_twitter_spark.functions.caches import unpersist_frame
+    from spark_app_twitter_spark.sources.sinks import write_training_shards
+
+    f = _stage_frames(spark, sf_dir, version)
+    try:
+        # hash over (doc_id, epoch) so repeats of a doc scatter
+        # across shards
+        keyed = _survivors(f).withColumn(
+            "shuffle_key",
+            F.md5(F.concat_ws(":", F.col("doc_id"), F.col("epoch"))),
+        )
+        write_training_shards(
+            keyed, out_path, n_shards, "shuffle_key", sort_cols=["shuffle_key"]
+        )
+        report = {label: f[key].count() for key, label in _labels(version)}
+    finally:
+        for df in f.values():
+            unpersist_frame(df)
+    written = spark.read.parquet(out_path)
+    report["written_rows"] = written.count()
+    report["distinct_docs_written"] = (
+        written.select("doc_id").distinct().count()
+    )
+    return report
+
+
 def prepare_training_corpus_v2(
     spark: SparkSession,
     sf_dir: str,
@@ -176,7 +492,8 @@ def prepare_training_corpus_v2(
          (highest quality score, not lowest id);
       3. Bloom-prefiltered benchmark decontamination (drop docs with
          any true benchmark-gram hit);
-      4. mixture epoch expansion to the target source shares;
+      4. mixture epoch expansion to the target source shares, the
+         held-out benchmark split excluded;
       5. deterministic shuffle-shard export (epoch rides along, so a
          doc's repeats land in different shards).
 
@@ -184,163 +501,7 @@ def prepare_training_corpus_v2(
     reads. Every stage is a semi/anti join of tiny key relations
     against one corpus scan; nothing collects driver-side.
     """
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.operators.dedup import (
-        cluster_best_representatives,
-        paragraph_dedup,
-    )
-    from spark_app_twitter_spark.operators.textstats import (
-        decontaminate_bloom,
-        mixture_apply,
-    )
-    from spark_app_twitter_spark.sources.sinks import write_training_shards
-
-    # Each stage frame is checkpointed: the export AND the funnel
-    # counts below both consume it, and without the pin each count
-    # would replay the stage's full lineage (CC rounds, bloom build,
-    # segment shuffle) a second time.
-    # 1. mostly-recycled docs out (strictly more dropped than kept
-    # segments)
-    seg = paragraph_dedup(spark, sf_dir).localCheckpoint(eager=True)
-    seg_keep = seg.where(
-        F.col("n_dropped") * 2 <= F.col("n_segments")
-    ).select("doc_id")
-    # 2. near-dup clusters: keep each cluster's best representative
-    reps = (
-        cluster_best_representatives(spark, sf_dir)
-        .select(F.col("rep_doc_id").alias("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    # 3. decontamination: any true benchmark-gram hit disqualifies
-    contaminated = (
-        decontaminate_bloom(spark, sf_dir)
-        .where(F.col("n_hit_grams") > 0)
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    # 4. epoch expansion (doc_id repeated per epoch)
-    epochs = mixture_apply(spark, sf_dir).localCheckpoint(eager=True)
-    survivors = (
-        epochs.join(seg_keep, "doc_id", "left_semi")
-        .join(reps, "doc_id", "left_semi")
-        .join(contaminated, "doc_id", "left_anti")
-    )
-    # 5. shuffled shard export: hash over (doc_id, epoch) so repeats
-    # of a doc scatter across shards
-    keyed = survivors.withColumn(
-        "shuffle_key",
-        F.md5(
-            F.concat_ws(":", F.col("doc_id"), F.col("epoch"))
-        ),
-    )
-    write_training_shards(
-        keyed,
-        out_path,
-        n_shards,
-        "shuffle_key",
-        sort_cols=["shuffle_key"],
-    )
-    written = spark.read.parquet(out_path)
-    return {
-        "corpus": seg.count(),
-        "after_segment_gate": seg_keep.count(),
-        "cluster_representatives": reps.count(),
-        "contaminated": contaminated.count(),
-        "epoch_rows": epochs.count(),
-        "written_rows": written.count(),
-        "distinct_docs_written": written.select("doc_id")
-        .distinct()
-        .count(),
-    }
-
-
-def _v3_stage_frames(
-    spark: SparkSession, sf_dir: str, reps_frame: DataFrame | None = None
-) -> dict:
-    """ONE definition of the v3 funnel's stage relations, shared by
-    the exporting job (prepare_training_corpus_v3) and the attested
-    funnel relation (pipeline_funnel_v3) so the two faces cannot
-    drift. Every frame is eagerly checkpointed: the survivor join
-    and the stage counts both consume them.
-
-    Keys: seg (paragraph report), gate (segment-gate survivors),
-    reps (lexical cluster representatives), semk (semantic dedup
-    keepers), cn / cs (n-gram / semantic contamination flags),
-    ep (mixture epoch rows, ALREADY excluding the held-out benchmark
-    docs — both screens flag only TRAINING docs, so the bench docs
-    themselves must be filtered here or they would sail through the
-    anti-joins into the export; the v1 job's documented invariant).
-    """
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.operators.dedup import (
-        cluster_best_representatives,
-        paragraph_dedup,
-    )
-    from spark_app_twitter_spark.operators.semdedup import (
-        decontaminate_semantic,
-        semdedup as sem_dedup_cells,
-    )
-    from spark_app_twitter_spark.operators.textstats import (
-        DECON_BENCH_MOD,
-        DECON_BENCH_REM,
-        decontaminate_bloom,
-        mixture_apply,
-    )
-
-    seg = paragraph_dedup(spark, sf_dir).localCheckpoint(eager=True)
-    gate = seg.where(
-        F.col("n_dropped") * 2 <= F.col("n_segments")
-    ).select("doc_id")
-    # reps_frame lets v6 swap in the capped O(n) LSH representative
-    # relation; default stays the exact audit chain (v3-v5 frozen)
-    reps = (
-        reps_frame
-        if reps_frame is not None
-        else cluster_best_representatives(spark, sf_dir).select(
-            F.col("rep_doc_id").alias("doc_id")
-        )
-    ).localCheckpoint(eager=True)
-    semk = (
-        sem_dedup_cells(spark, sf_dir)
-        .where(F.col("keep"))
-        .select(F.col("vec_id").alias("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    cn = (
-        decontaminate_bloom(spark, sf_dir)
-        .where(F.col("n_hit_grams") > 0)
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    cs = (
-        decontaminate_semantic(spark, sf_dir)
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    ep = (
-        mixture_apply(spark, sf_dir)
-        .where(
-            (F.col("doc_id") % DECON_BENCH_MOD) != DECON_BENCH_REM
-        )
-        .localCheckpoint(eager=True)
-    )
-    return {
-        "seg": seg, "gate": gate, "reps": reps,
-        "semk": semk, "cn": cn, "cs": cs, "ep": ep,
-    }
-
-
-def _v3_survivors(frames: dict) -> DataFrame:
-    return (
-        frames["ep"]
-        .join(frames["gate"], "doc_id", "left_semi")
-        .join(frames["reps"], "doc_id", "left_semi")
-        .join(frames["semk"], "doc_id", "left_semi")
-        .join(frames["cn"], "doc_id", "left_anti")
-        .join(frames["cs"], "doc_id", "left_anti")
-    )
+    return _export_corpus(spark, sf_dir, "v2", out_path, n_shards)
 
 
 def prepare_training_corpus_v3(
@@ -374,40 +535,7 @@ def prepare_training_corpus_v3(
     scan; the embedding stages ride the shared two-level cell
     assignment; nothing corpus-sized collects driver-side.
     """
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.sources.sinks import write_training_shards
-
-    f = _v3_stage_frames(spark, sf_dir)
-    survivors = _v3_survivors(f)
-    keyed = survivors.withColumn(
-        "shuffle_key",
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("epoch"))),
-    )
-    write_training_shards(
-        keyed,
-        out_path,
-        n_shards,
-        "shuffle_key",
-        sort_cols=["shuffle_key"],
-    )
-    written = spark.read.parquet(out_path)
-    return {
-        "corpus": f["seg"].count(),
-        "after_segment_gate": f["gate"].count(),
-        "lexical_representatives": f["reps"].count(),
-        "semantic_survivors": f["semk"].count(),
-        "contaminated_ngram": f["cn"].count(),
-        "contaminated_semantic": f["cs"].count(),
-        "contaminated_both": f["cn"].join(
-            f["cs"], "doc_id", "left_semi"
-        ).count(),
-        "epoch_rows": f["ep"].count(),
-        "written_rows": written.count(),
-        "distinct_docs_written": written.select("doc_id")
-        .distinct()
-        .count(),
-    }
+    return _export_corpus(spark, sf_dir, "v3", out_path, n_shards)
 
 
 def pipeline_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,43 +549,7 @@ def pipeline_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     key relations the job builds; the stage frames checkpoint once
     and feed both the survivor join and their counts.
     """
-    from pyspark.sql import functions as F
-
-    f = _v3_stage_frames(spark, sf_dir)
-    seg, gate, reps, semk, cn, cs, ep = (
-        f["seg"], f["gate"], f["reps"], f["semk"], f["cn"], f["cs"],
-        f["ep"].select("doc_id", "epoch"),
-    )
-    surv = _v3_survivors(
-        {**f, "ep": ep}
-    ).localCheckpoint(eager=True)
-
-    def row(stage: str, df: DataFrame, expr=None) -> DataFrame:
-        agg = expr if expr is not None else F.count(F.lit(1))
-        return df.agg(agg.cast("long").alias("n_docs")).select(
-            F.lit(stage).alias("stage"), "n_docs"
-        )
-
-    parts = [
-        row("corpus", seg),
-        row("after_segment_gate", gate),
-        row("lexical_representatives", reps),
-        row("semantic_survivors", semk),
-        row("contaminated_ngram", cn),
-        row("contaminated_semantic", cs),
-        row("contaminated_both", cn.join(cs, "doc_id", "left_semi")),
-        row("epoch_rows", ep),
-        row("surviving_epoch_rows", surv),
-        row(
-            "surviving_distinct_docs",
-            surv,
-            F.count_distinct(F.col("doc_id")),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _funnel_report(spark, sf_dir, "v3")
 
 
 def _pipeline_funnel_v3_sql() -> str:
@@ -539,62 +631,6 @@ PIPELINE_FUNNEL_V3_SQL = _pipeline_funnel_v3_sql()
 # ---------------------------------------------------------------------------
 
 
-def _v4_stage_frames(
-    spark: SparkSession, sf_dir: str, reps_frame: DataFrame | None = None
-) -> dict:
-    """v3's stage relations PLUS:
-
-    qgate — docs at or above their OWN source's quality floor (the
-    text_quality_floor_by_source calibration applied per doc: bucket
-    >= floor_bucket, a |sources|-row broadcast join);
-    quota — the topic-balanced keep set (sim_cluster_balanced_sample
-    under the vec_id == doc_id contract: each semantic cell
-    contributes at most its quota, tails kept whole).
-    """
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.functions.text import tokens
-    from spark_app_twitter_spark.operators.clustering import (
-        cluster_balanced_sample,
-    )
-    from spark_app_twitter_spark.operators.textstats import (
-        QUALITY_FLOOR_GRID,
-        quality_floor_by_source,
-        quality_score_expr,
-    )
-    from spark_app_twitter_spark.sources.parquet import load_table
-
-    f = _v3_stage_frames(spark, sf_dir, reps_frame=reps_frame)
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    bucket = F.floor(
-        quality_score_expr(tokens("text")) * F.lit(QUALITY_FLOOR_GRID)
-    ).cast("int")
-    floors = quality_floor_by_source(spark, sf_dir).select(
-        "source", "floor_bucket"
-    )
-    f["qgate"] = (
-        docs.select("doc_id", "source", bucket.alias("bucket"))
-        .join(F.broadcast(floors), "source")
-        .where(F.col("bucket") >= F.col("floor_bucket"))
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    f["quota"] = (
-        cluster_balanced_sample(spark, sf_dir)
-        .select(F.col("vec_id").alias("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    return f
-
-
-def _v4_survivors(frames: dict) -> DataFrame:
-    return (
-        _v3_survivors(frames)
-        .join(frames["qgate"], "doc_id", "left_semi")
-        .join(frames["quota"], "doc_id", "left_semi")
-    )
-
-
 def prepare_training_corpus_v4(
     spark: SparkSession,
     sf_dir: str,
@@ -608,35 +644,7 @@ def prepare_training_corpus_v4(
     (head topics capped at the sampler's deterministic keep set).
     Scale shape unchanged: two more semi joins of bounded/sub-linear
     key relations against the epoch stream."""
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.sources.sinks import write_training_shards
-
-    f = _v4_stage_frames(spark, sf_dir)
-    survivors = _v4_survivors(f)
-    keyed = survivors.withColumn(
-        "shuffle_key",
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("epoch"))),
-    )
-    write_training_shards(
-        keyed, out_path, n_shards, "shuffle_key", sort_cols=["shuffle_key"]
-    )
-    written = spark.read.parquet(out_path)
-    return {
-        "corpus": f["seg"].count(),
-        "after_segment_gate": f["gate"].count(),
-        "lexical_representatives": f["reps"].count(),
-        "semantic_survivors": f["semk"].count(),
-        "quality_floor_survivors": f["qgate"].count(),
-        "topic_quota_kept": f["quota"].count(),
-        "contaminated_ngram": f["cn"].count(),
-        "contaminated_semantic": f["cs"].count(),
-        "epoch_rows": f["ep"].count(),
-        "written_rows": written.count(),
-        "distinct_docs_written": written.select("doc_id")
-        .distinct()
-        .count(),
-    }
+    return _export_corpus(spark, sf_dir, "v4", out_path, n_shards)
 
 
 def pipeline_funnel_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,39 +652,7 @@ def pipeline_funnel_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare_training_corpus_v4, same stage relations, counts instead
     of a shard export. The DuckDB twin replays every component
     oracle including the two late-r12 stages."""
-    from pyspark.sql import functions as F
-
-    f = _v4_stage_frames(spark, sf_dir)
-    ep = f["ep"].select("doc_id", "epoch")
-    surv = _v4_survivors({**f, "ep": ep}).localCheckpoint(eager=True)
-
-    def row(stage: str, df: DataFrame, expr=None) -> DataFrame:
-        agg = expr if expr is not None else F.count(F.lit(1))
-        return df.agg(agg.cast("long").alias("n_docs")).select(
-            F.lit(stage).alias("stage"), "n_docs"
-        )
-
-    parts = [
-        row("corpus", f["seg"]),
-        row("after_segment_gate", f["gate"]),
-        row("lexical_representatives", f["reps"]),
-        row("semantic_survivors", f["semk"]),
-        row("quality_floor_survivors", f["qgate"]),
-        row("topic_quota_kept", f["quota"]),
-        row("contaminated_ngram", f["cn"]),
-        row("contaminated_semantic", f["cs"]),
-        row("epoch_rows", ep),
-        row("surviving_epoch_rows", surv),
-        row(
-            "surviving_distinct_docs",
-            surv,
-            F.count_distinct(F.col("doc_id")),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _funnel_report(spark, sf_dir, "v4")
 
 
 def _pipeline_funnel_v4_sql() -> str:
@@ -769,32 +745,6 @@ UNION ALL SELECT 'surviving_distinct_docs',
 PIPELINE_FUNNEL_V4_SQL = _pipeline_funnel_v4_sql()
 
 
-def _v5_stage_frames(
-    spark: SparkSession, sf_dir: str, reps_frame: DataFrame | None = None
-) -> dict:
-    """v4's stage relations PLUS rgate — docs passing the r14 Gopher
-    n-gram repetition battery (operators/textstats.repetition_rules):
-    phrase-spam (one dominant n-gram) and boilerplate (heavy
-    duplicated-5-gram mass) are cut BEFORE epoch planning, the gate
-    no word-level rule in the v3 stack could express."""
-    from spark_app_twitter_spark.operators.textstats import (
-        repetition_rules,
-    )
-
-    f = _v4_stage_frames(spark, sf_dir, reps_frame=reps_frame)
-    f["rgate"] = (
-        repetition_rules(spark, sf_dir)
-        .where("passes")
-        .select("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    return f
-
-
-def _v5_survivors(frames: dict) -> DataFrame:
-    return _v4_survivors(frames).join(frames["rgate"], "doc_id", "left_semi")
-
-
 def prepare_training_corpus_v5(
     spark: SparkSession,
     sf_dir: str,
@@ -805,75 +755,13 @@ def prepare_training_corpus_v5(
     must ALSO pass every n-gram repetition ceiling. Scale shape
     unchanged — one more semi join of a corpus-keyed boolean
     relation against the epoch stream."""
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.sources.sinks import write_training_shards
-
-    f = _v5_stage_frames(spark, sf_dir)
-    survivors = _v5_survivors(f)
-    keyed = survivors.withColumn(
-        "shuffle_key",
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("epoch"))),
-    )
-    write_training_shards(
-        keyed, out_path, n_shards, "shuffle_key", sort_cols=["shuffle_key"]
-    )
-    written = spark.read.parquet(out_path)
-    return {
-        "corpus": f["seg"].count(),
-        "after_segment_gate": f["gate"].count(),
-        "lexical_representatives": f["reps"].count(),
-        "semantic_survivors": f["semk"].count(),
-        "quality_floor_survivors": f["qgate"].count(),
-        "topic_quota_kept": f["quota"].count(),
-        "repetition_pass": f["rgate"].count(),
-        "contaminated_ngram": f["cn"].count(),
-        "contaminated_semantic": f["cs"].count(),
-        "epoch_rows": f["ep"].count(),
-        "written_rows": written.count(),
-        "distinct_docs_written": written.select("doc_id")
-        .distinct()
-        .count(),
-    }
+    return _export_corpus(spark, sf_dir, "v5", out_path, n_shards)
 
 
 def pipeline_funnel_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, n_docs): the v5 funnel report — v4 plus the r14
     repetition gate, every component replayed by the DuckDB twin."""
-    from pyspark.sql import functions as F
-
-    f = _v5_stage_frames(spark, sf_dir)
-    ep = f["ep"].select("doc_id", "epoch")
-    surv = _v5_survivors({**f, "ep": ep}).localCheckpoint(eager=True)
-
-    def row(stage: str, df: DataFrame, expr=None) -> DataFrame:
-        agg = expr if expr is not None else F.count(F.lit(1))
-        return df.agg(agg.cast("long").alias("n_docs")).select(
-            F.lit(stage).alias("stage"), "n_docs"
-        )
-
-    parts = [
-        row("corpus", f["seg"]),
-        row("after_segment_gate", f["gate"]),
-        row("lexical_representatives", f["reps"]),
-        row("semantic_survivors", f["semk"]),
-        row("quality_floor_survivors", f["qgate"]),
-        row("topic_quota_kept", f["quota"]),
-        row("repetition_pass", f["rgate"]),
-        row("contaminated_ngram", f["cn"]),
-        row("contaminated_semantic", f["cs"]),
-        row("epoch_rows", ep),
-        row("surviving_epoch_rows", surv),
-        row(
-            "surviving_distinct_docs",
-            surv,
-            F.count_distinct(F.col("doc_id")),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _funnel_report(spark, sf_dir, "v5")
 
 
 def _pipeline_funnel_v5_sql() -> str:
@@ -907,66 +795,14 @@ cn AS MATERIALIZED ("""
 PIPELINE_FUNNEL_V5_SQL = _pipeline_funnel_v5_sql()
 
 
-def _v6_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
-    """v5's stage relations with the LEXICAL REPRESENTATIVE stage
-    routed through the capped O(n) LSH cluster relation
-    (dedup.lsh_cluster_best) instead of the exact ngram-Jaccard CC
-    chain — the 100 TB-ready funnel. Measured motivation
-    (tools/decomp_funnel.py at the 100x near-dup fixture): the exact
-    reps stage was 1,392 s of the funnel's ~1,450 s; every other
-    stage is seconds. The capped chain's star emission is
-    output-linear, so v6 removes the funnel's only super-linear
-    stage while keeping the election rule (keep-best quality,
-    tie-break lowest id) identical."""
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.operators.dedup import lsh_cluster_best
-
-    reps6 = lsh_cluster_best(spark, sf_dir).select(
-        F.col("rep_doc_id").alias("doc_id")
-    )
-    return _v5_stage_frames(spark, sf_dir, reps_frame=reps6)
-
-
 def pipeline_funnel_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, n_docs): the v6 funnel report — v5 with the capped
-    lexical representative stage (see _v6_stage_frames). Same stage
-    names as v5; only the reps relation (and therefore the survivor
-    intersection) changes."""
-    from pyspark.sql import functions as F
-
-    f = _v6_stage_frames(spark, sf_dir)
-    ep = f["ep"].select("doc_id", "epoch")
-    surv = _v5_survivors({**f, "ep": ep}).localCheckpoint(eager=True)
-
-    def row(stage: str, df: DataFrame, expr=None) -> DataFrame:
-        agg = expr if expr is not None else F.count(F.lit(1))
-        return df.agg(agg.cast("long").alias("n_docs")).select(
-            F.lit(stage).alias("stage"), "n_docs"
-        )
-
-    parts = [
-        row("corpus", f["seg"]),
-        row("after_segment_gate", f["gate"]),
-        row("lexical_representatives", f["reps"]),
-        row("semantic_survivors", f["semk"]),
-        row("quality_floor_survivors", f["qgate"]),
-        row("topic_quota_kept", f["quota"]),
-        row("repetition_pass", f["rgate"]),
-        row("contaminated_ngram", f["cn"]),
-        row("contaminated_semantic", f["cs"]),
-        row("epoch_rows", ep),
-        row("surviving_epoch_rows", surv),
-        row(
-            "surviving_distinct_docs",
-            surv,
-            F.count_distinct(F.col("doc_id")),
-        ),
-    ]
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    O(n) lexical representative stage (``reps_lsh``: the LSH cluster
+    relation dedup.lsh_cluster_best instead of the exact ngram-Jaccard
+    CC chain, same keep-best election). Same stage names as v5; only
+    the reps relation (and therefore the survivor intersection)
+    changes."""
+    return _funnel_report(spark, sf_dir, "v6")
 
 
 def _pipeline_funnel_v6_sql() -> str:
@@ -995,40 +831,10 @@ def prepare_training_corpus_v6(
     n_shards: int = 8,
 ) -> dict:
     """The v5 build with the capped O(n) lexical representative
-    stage (_v6_stage_frames) — the 100 TB-ready export job. Same
-    report keys as v5; pipeline_funnel_v6 is its attested face (one
-    stage-frame definition, two faces — the engine's standing
-    funnel/job contract)."""
-    from pyspark.sql import functions as F
-
-    from spark_app_twitter_spark.sources.sinks import write_training_shards
-
-    f = _v6_stage_frames(spark, sf_dir)
-    survivors = _v5_survivors(f)
-    keyed = survivors.withColumn(
-        "shuffle_key",
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("epoch"))),
-    )
-    write_training_shards(
-        keyed, out_path, n_shards, "shuffle_key", sort_cols=["shuffle_key"]
-    )
-    written = spark.read.parquet(out_path)
-    return {
-        "corpus": f["seg"].count(),
-        "after_segment_gate": f["gate"].count(),
-        "lexical_representatives": f["reps"].count(),
-        "semantic_survivors": f["semk"].count(),
-        "quality_floor_survivors": f["qgate"].count(),
-        "topic_quota_kept": f["quota"].count(),
-        "repetition_pass": f["rgate"].count(),
-        "contaminated_ngram": f["cn"].count(),
-        "contaminated_semantic": f["cs"].count(),
-        "epoch_rows": f["ep"].count(),
-        "written_rows": written.count(),
-        "distinct_docs_written": written.select("doc_id")
-        .distinct()
-        .count(),
-    }
+    stage — the 100 TB-ready export job. Same report keys as v5;
+    pipeline_funnel_v6 is its attested face (one stage table, two
+    faces — the engine's standing funnel/job contract)."""
+    return _export_corpus(spark, sf_dir, "v6", out_path, n_shards)
 
 
 def pipeline_pretrain_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1036,8 +842,7 @@ def pipeline_pretrain_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_pieces, last_fill_pieces, fertility_bp): the end-to-end
     PRETRAINING EXPORT MANIFEST — the v6 funnel's surviving DISTINCT
     docs (v5 gates with the capped O(n) lexical representative
-    stage, _v6_stage_frames) tokenized under the trained unigram
-    vocabulary and
+    stage) tokenized under the trained unigram vocabulary and
     exact-fill rollover-packed into PACK_BUDGET-piece training
     sequences, reported per output shard. This is the capstone a
     reference user actually ships: curation (dedup + semantic +
@@ -1072,9 +877,9 @@ def pipeline_pretrain_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from spark_app_twitter_spark.operators.unigram import unigram_encode
 
-    f = _v6_stage_frames(spark, sf_dir)
+    f = _stage_frames(spark, sf_dir, "v6")
     surv_docs = (
-        _v5_survivors({**f, "ep": f["ep"].select("doc_id", "epoch")})
+        _survivors({**f, "ep": f["ep"].select("doc_id", "epoch")})
         .select("doc_id")
         .distinct()
         .localCheckpoint(eager=True)

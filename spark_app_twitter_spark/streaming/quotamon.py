@@ -309,7 +309,7 @@ def v4_admission_from_state(
     state — the per-source quality floor from qualitymon's histogram
     and the topic quota from this module's fold. After the streams
     drain the same corpus, this equals the batch funnel's
-    qgate ∩ quota (jobs._v4_stage_frames) exactly (pinned in
+    qgate ∩ quota (the jobs._STAGES funnel table) exactly (pinned in
     tests/test_streaming.py — stream == batch, the windowed.py
     discipline)."""
     from spark_app_twitter_spark.functions.text import tokens

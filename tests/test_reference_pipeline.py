@@ -159,6 +159,36 @@ def test_ml_pipeline_adapter_matches_enrich(spark, sf_dir):
     assert diff.count() == 0
 
 
+def test_funnel_stage_table_matches_oracle_sql():
+    """No Spark session: each version's stage list reports the same
+    rows, in the same order, as its DuckDB twin selects, and gates /
+    screens the same CTEs in the twin's survivor predicate (the
+    ``reps_lsh`` stage is the twin's swapped ``reps`` CTE)."""
+    import re
+
+    from spark_app_twitter_spark import jobs
+
+    for v in (3, 4, 5, 6):
+        sql = getattr(jobs, f"PIPELINE_FUNNEL_V{v}_SQL")
+        labels = [label for _, label in jobs._labels(f"v{v}")]
+        assert re.findall(r"SELECT '([a-z_]+)'", sql) == labels + [
+            "surviving_epoch_rows",
+            "surviving_distinct_docs",
+        ], v
+        kinds = {"IN": "left_semi", "NOT IN": "left_anti"}
+        joins = [
+            (kinds[op], cte)
+            for op, cte in re.findall(
+                r"ep\.doc_id (NOT IN|IN) \(SELECT doc_id FROM (\w+)\)", sql
+            )
+        ]
+        assert joins == [
+            (jobs._STAGES[k].kind, k.removesuffix("_lsh"))
+            for k in jobs._VERSIONS[f"v{v}"]
+            if jobs._STAGES[k].kind
+        ], v
+
+
 def test_prepare_training_corpus_v2_funnel(spark, tmp_path, sf_dir):
     """The round-6 capstone: every stage filters as specified, the
     export is complete (written rows == surviving epoch rows) and
@@ -189,6 +219,18 @@ def test_prepare_training_corpus_v2_funnel(spark, tmp_path, sf_dir):
         .count()
     )
     assert bad == 0
+    # the held-out benchmark split itself must NEVER train
+    from spark_app_twitter_spark.operators.textstats import (
+        DECON_BENCH_MOD,
+        DECON_BENCH_REM,
+    )
+
+    assert (
+        spark.read.parquet(out1)
+        .where((F.col("doc_id") % DECON_BENCH_MOD) == DECON_BENCH_REM)
+        .count()
+        == 0
+    )
     # determinism: a second run writes identical rows
     out2 = str(tmp_path / "v2b")
     jobs.prepare_training_corpus_v2(spark, sf_dir, out2, n_shards=4)
@@ -393,7 +435,7 @@ def test_pipeline_funnel_v4_parity_job_agreement_and_composition(
     )
     assert written.join(quota, "doc_id", "left_anti").count() == 0
     # and clears its own source's floor
-    frames = jobs._v4_stage_frames(spark, sf_dir)
+    frames = jobs._stage_frames(spark, sf_dir, "v4")
     assert written.join(frames["qgate"], "doc_id", "left_anti").count() == 0
     # composing two more gates can only shrink the v3 survivor set
     v3 = {r.stage: r.n_docs for r in
@@ -441,9 +483,9 @@ def test_pipeline_pretrain_export_parity_and_manifest_invariants(
     # doc accounting: manifest totals equal the survivor-filtered
     # sizing relation exactly (no doc gained or lost by packing);
     # the export composes the V6 frames (capped lexical stage)
-    f = jobs._v6_stage_frames(spark, sf_dir)
+    f = jobs._stage_frames(spark, sf_dir, "v6")
     surv = (
-        jobs._v5_survivors(
+        jobs._survivors(
             {**f, "ep": f["ep"].select("doc_id", "epoch")}
         )
         .select("doc_id")
@@ -551,6 +593,18 @@ def test_prepare_training_corpus_v6_job_agreement(spark, tmp_path, sf_dir):
         r.rep_doc_id for r in dedup.lsh_cluster_best(spark, sf_dir).collect()
     }
     assert {r.doc_id for r in written.select("doc_id").collect()} <= reps
+    # the job releases its stage checkpoints: a second call (session
+    # artifacts now warm) leaves fewer new persisted RDDs than the
+    # stage frames it checkpoints
+    pinned = sum(jobs._STAGES[k].pin for k in jobs._VERSIONS["v6"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    again = jobs.prepare_training_corpus_v6(
+        spark, sf_dir, str(tmp_path / "v6b"), n_shards=4
+    )
+    grown = len(set(jsc.getPersistentRDDs().keySet()) - before)
+    assert again == rep
+    assert grown < pinned, (grown, pinned)
 
 
 def test_pipeline_export_append_parity_and_invariants(spark, sf_dir):

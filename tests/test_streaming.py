@@ -2778,7 +2778,7 @@ def test_v4_admission_stream_equals_batch_funnel_stages(
         ).collect()
     )
     # the batch funnel's qgate ∩ quota, from the same definitions
-    # _v4_stage_frames composes
+    # the qgate / quota stages of jobs._STAGES compose
     bucket = F.floor(
         quality_score_expr(tokens("text")) * F.lit(QUALITY_FLOOR_GRID)
     ).cast("int")

@@ -4,8 +4,8 @@
 pipeline_pretrain_export is the first funnel-composed entry to get a
 100x stress row (25.6x at 10x data — the repo's worst ratio), so
 attribute the wall to stages before optimizing. Uses the SAME
-constructors as jobs._v3/_v4/_v5_stage_frames; each phase prints as
-it completes (partial runs still inform).
+constructors as the v5 stage list of the jobs._STAGES funnel table;
+each phase prints as it completes (partial runs still inform).
 
 Usage: python tools/decomp_funnel.py [sf_dir]
 (sf_dir defaults to the 10x stress fixture if built, else sf0.1)

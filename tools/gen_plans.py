@@ -4,6 +4,11 @@ queries, as reviewable evidence of scan pruning / pushdown /
 broadcast / shuffle discipline.
 
 Run: python tools/gen_plans.py   (writes PLANS.md at the repo root)
+
+Dump mode: python tools/gen_plans.py --dump ROUND TAG name [name ...]
+writes each named query's explain('formatted') to
+plans/ROUND/<name>_<TAG>.txt (plan build only, no execution), e.g.
+the before/after plan pairs of an optimization round.
 """
 
 from __future__ import annotations
@@ -131,5 +136,30 @@ def main() -> None:
     spark.stop()
 
 
+def dump(round_: str, tag: str, names: list[str]) -> None:
+    import __spark_entry__ as ent
+
+    spark = get_spark(f"plans_{round_}", master="local[4]")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = ent.queries()
+    out_dir = os.path.join(ROOT, "plans", round_)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        try:
+            plan = formatted_plan(qs[name](spark, SF_DIR))
+        except Exception as e:  # noqa: BLE001
+            plan = f"PLAN BUILD FAILED: {e}"
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} chars)", flush=True)
+    spark.stop()
+
+
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--dump"]:
+        if len(sys.argv) < 5:
+            sys.exit("usage: gen_plans.py --dump ROUND TAG name [name ...]")
+        dump(sys.argv[2], sys.argv[3], sys.argv[4:])
+    else:
+        main()
