@@ -38,6 +38,13 @@ _DEFAULTS = {
     # compaction defaults are fine. Keep stop-gracefully semantics via
     # query.stop(), not the legacy DStream flag the reference sets.
     "spark.sql.streaming.stateStore.stateSchemaCheck": "true",
+    # Idle poll: a trigger that found no new data sleeps this long
+    # before asking the source again. Spark's default, 10 ms, keeps
+    # idle long-lived queries spinning on the CPU. Only the idle loop
+    # sleeps: a trigger that ran a batch, including a no-data
+    # watermark batch, checks again at once, so new data waits at most
+    # 100 ms. Spark reads it once, when a query is built.
+    "spark.sql.streaming.pollingDelay": "100ms",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

@@ -85,6 +85,14 @@ def upsert_parquet_batch(
       left as it was. A watermark-advance micro-batch, which carries
       no rows, still commits its state through that one execution.
     - Every block the call stores is released before it returns.
+    - The table is rewritten as one file (``coalesce(1)``, no
+      shuffle). That holds because the serving table has one row per
+      key, i.e. per (hour, topic): 43,800 rows for 5 topics over a
+      year, whatever the event volume. One file means one scan task
+      for the next upsert and for every dashboard read, where a
+      rewrite per partition of (scan ∪ batch) left several small
+      files. A table keyed by something that grows with the events
+      would need a file count that grows with it.
     """
     spark = batch.sparkSession
     batch = batch.localCheckpoint(eager=True)
@@ -102,14 +110,14 @@ def upsert_parquet_batch(
             # micro-batch (unbounded data loss).
             if not _is_missing_path(e):
                 raise
-            out = batch
+            out = batch.coalesce(1)
         else:
             remaining = current.join(
                 batch.select(*keys).dropDuplicates(keys), list(keys), "left_anti"
             )
             # Sever lineage before overwriting the path we just read
             # from — a lazy plan would delete its own input mid-scan.
-            out = remaining.unionByName(batch).localCheckpoint(eager=True)
+            out = remaining.unionByName(batch).coalesce(1).localCheckpoint(eager=True)
             held.append(out)
         out.write.mode("overwrite").parquet(path)
     finally:

@@ -18,12 +18,14 @@ functions.py:42-43,63-71``). The engine instead:
 State at scale: |topics| x |open windows| rows for the aggregation +
 one entry per id inside the watermark horizon for dedup — both
 bounded by the watermark delay, independent of total stream length.
-That state is small, so the serving query starts on one state
-partition per core (``defaultParallelism``), not the batch
-``spark.sql.shuffle.partitions``. Each partition opens, loads and
+The serving query holds only the aggregation's state, and the
+shuffle into it carries partial aggregates — at most map tasks x
+topics x open windows rows — not events. So it starts on ONE state
+partition at any input volume, not the batch
+``spark.sql.shuffle.partitions``: each partition opens, loads and
 commits its own state stores every micro-batch, and a stream can
-never coalesce them: it runs with AQE off, and its checkpoint pins
-the count from the first start. A checkpoint started under another
+never coalesce them (it runs with AQE off, and its checkpoint pins
+the count from the first start). A checkpoint started under another
 count keeps that count on restart.
 """
 
@@ -238,13 +240,13 @@ def run_hourly_serving(
     """The full replacement for the reference's cron loop: one
     long-lived query maintaining the serving table incrementally.
 
-    A new checkpoint gets one state partition per core (see the
-    module docstring); the setting is scoped to ``start()``, which
-    copies the session conf into the query's own session."""
+    A new checkpoint gets one state partition (see the module
+    docstring); the setting is scoped to ``start()``, which copies the
+    session conf into the query's own session. An existing checkpoint
+    keeps the count its offset log records."""
     agg = hourly_topic_aggregate(parsed_stream, watermark)
     spark = parsed_stream.sparkSession
-    cores = str(spark.sparkContext.defaultParallelism)
-    with session_conf(spark, {"spark.sql.shuffle.partitions": cores}):
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         return write_upsert_stream(
             agg,
             serving_path,

@@ -54,6 +54,26 @@ def test_upsert_parquet_batch_frees_its_blocks(spark, tmp_path):
     assert spark.read.parquet(path).count() == 4
 
 
+def test_upsert_parquet_batch_writes_one_file(spark, tmp_path):
+    """The serving table is rewritten as exactly one parquet file on
+    the first-write path and on the merge path, whatever the
+    partitioning of the batch or of the table's scan."""
+    import os
+
+    path = str(tmp_path / "serving")
+    for run, keys in enumerate([range(0, 8), range(4, 12), range(10, 16)]):
+        batch = spark.createDataFrame(
+            [(f"k{i}", run) for i in keys], "k string, run int"
+        ).repartition(3)
+        upsert_parquet_batch(batch, run, path, keys=["k"])
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(files) == 1, (run, files)
+    got = {r.k: r.run for r in spark.read.parquet(path).collect()}
+    assert got == {
+        f"k{i}": 0 if i < 4 else 1 if i < 10 else 2 for i in range(16)
+    }
+
+
 def test_upsert_parquet_batch_empty_batch_writes_nothing(spark, tmp_path):
     """A batch with no rows (a watermark-advance micro-batch) leaves
     an existing table's files untouched and creates no table."""

@@ -143,10 +143,10 @@ def _last_state(q):
 
 def test_hourly_serving_runs_each_microbatch_once(spark, tmp_path):
     """The upsert executes its batch once, so the stateful stage runs
-    and commits once per micro-batch, on one state partition per core:
-    each micro-batch reports one state-store instance per partition,
-    and the state rows equal the (window, topic) cells still open
-    behind the watermark. Running a batch twice doubles both."""
+    and commits once per micro-batch, on one state partition: each
+    micro-batch reports one state-store instance, and the state rows
+    equal the (window, topic) cells still open behind the watermark.
+    Running a batch twice doubles both (2 instances)."""
     src = str(tmp_path / "src")
     serving = str(tmp_path / "serving")
     _write_fixture(src, FIXTURE[:4])
@@ -159,11 +159,10 @@ def test_hourly_serving_runs_each_microbatch_once(spark, tmp_path):
     )
     q.awaitTermination(180)
 
-    cores = spark.sparkContext.defaultParallelism
     stateful = [p for p in q.recentProgress if p["stateOperators"]]
     assert [p["numInputRows"] > 0 for p in stateful] == [True, False]
     for p in stateful:
-        assert p["stateOperators"][0]["numStateStoreInstances"] == cores
+        assert p["stateOperators"][0]["numStateStoreInstances"] == 1
     last = stateful[-1]
     watermark = datetime.datetime.fromisoformat(
         last["eventTime"]["watermark"].replace("Z", "+00:00")
@@ -233,6 +232,39 @@ def test_hourly_serving_restart_keeps_checkpoint_partition_count(
         ("2022-03-14 00:00:00", "NATO"): 2,
         ("2022-03-14 01:00:00", "Biden"): 1,
     }
+
+
+def test_run_pipeline_idle_poll_is_100ms(spark, tmp_path):
+    """Both long-lived queries of run_pipeline poll an idle source
+    every 100 ms (the session default), not Spark's 10 ms, and still
+    pick up data landed while they idle. Pins Spark's internal
+    StreamExecution.pollingDelayMs, so an upgrade that drops the conf
+    fails here."""
+    from spark_app_twitter_spark.jobs import PipelineConfig, run_pipeline
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    cfg = PipelineConfig(
+        file_source_path=src,
+        datalake_path=str(tmp_path / "lake"),
+        serving_path=str(tmp_path / "serve"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+    )
+    queries = run_pipeline(spark, cfg)
+    try:
+        delays = [q._jsq.streamingQuery().pollingDelayMs() for q in queries]
+        assert delays == [100, 100]
+        # land the batch by rename, so no query sees a partial file
+        staging = str(tmp_path / "staging")
+        _write_fixture(staging, FIXTURE[:4])
+        os.rename(os.path.join(staging, "part0.json"), os.path.join(src, "part0.json"))
+        for q in queries:
+            q.processAllAvailable()
+        assert spark.read.parquet(cfg.datalake_path).count() == 4
+        assert spark.read.parquet(cfg.serving_path).count() == 4
+    finally:
+        for q in queries:
+            q.stop()
 
 
 def test_streaming_agg_matches_batch(spark, tmp_path):
